@@ -1898,6 +1898,8 @@ def train_hashed_text_lr(
     # path's exactly: z folds the gram weights left-to-right in _idxs
     # order, per-key gradient sums accumulate in exploded row order
     # (plain Python floats), and the update divides by the same n_docs.
+    # A null-label row adds no gradient or loss term (a null residual is
+    # skipped by the distributed sum) but still counts in n_docs.
     # Verified output-identical on all test SFs.
     if feats.rdd.getNumPartitions() == 1:
         iters, lr, nd = int(n_iters), float(learn_rate), int(n_docs)
@@ -1922,6 +1924,8 @@ def train_hashed_text_lr(
             for _ in range(iters):
                 sums: dict[int, float] = {}
                 for y_, idxs_, n_ in rows:
+                    if math.isnan(y_):
+                        continue
                     acc = 0.0
                     for i in idxs_:
                         acc += wl[i]
@@ -1937,11 +1941,11 @@ def train_hashed_text_lr(
                     sums[-2] = sums.get(-2, 0.0) + (
                         math.log(1.0 + ez) + (1.0 - y_) * z
                     )
-                ls.append(sums[-2] / nd)
+                ls.append(sums.get(-2, 0.0) / nd)
                 for i, g in sums.items():
                     if i >= 0:
                         wl[i] -= lr * g / nd
-                bl -= lr * sums[-1] / nd
+                bl -= lr * sums.get(-1, 0.0) / nd
             yield pd.DataFrame(
                 {"w": [wl], "b": [bl], "losses": [ls]}
             )
@@ -1990,12 +1994,13 @@ def train_hashed_text_lr(
             .agg(F.sum("x.g").alias("g"))
             .collect()
         )
-        sums = {int(r["i"]): float(r["g"]) for r in rows}
-        losses.append(sums[-2] / n_docs)
+        # a key only null-label docs touch sums to null: no gradient
+        sums = {int(r["i"]): float(r["g"]) for r in rows if r["g"] is not None}
+        losses.append(sums.get(-2, 0.0) / n_docs)
         for i, g in sums.items():
             if i >= 0:
                 w[i] -= learn_rate * g / n_docs
-        b -= learn_rate * sums[-1] / n_docs
+        b -= learn_rate * sums.get(-1, 0.0) / n_docs
     return {"weights": w, "bias": b, "losses": losses}
 
 

@@ -59,22 +59,20 @@ def list_source(
     return sorted(out)
 
 
-def read_zip_lines(
+def _read_archive_lines(
     spark: SparkSession,
     paths: list[str] | str,
+    decompress,
     drop_first_line: bool = False,
 ) -> DataFrame:
-    """Text lines from the FIRST entry of each zip archive.
-
-    ref: Text/TextSource.cs:80-108 — the reference opens the archive and
-    reads only ``Entries.First()``; same here. Zip is not a splittable
-    codec, so the unit of parallelism is the archive (one task each),
-    exactly the reference's per-blob model; the whole archive is
+    """Text lines of whole-blob archives: ``decompress(content) -> str``
+    runs once per blob inside the task that read it. Archive codecs are
+    not splittable, so the unit of parallelism is the archive (one task
+    each), exactly the reference's per-blob model; the whole archive is
     decompressed in that task's memory, bounded by
     ``spark.sql.files.maxPartitionBytes`` admission on the binary read.
-    ``drop_first_line`` peels a header at the source (zip lines arrive in
-    order inside the task, so no window is needed).
-    """
+    ``drop_first_line`` peels a header at the source (lines arrive in
+    order inside the task, so no window is needed)."""
     import pandas as pd
 
     if isinstance(paths, str):
@@ -82,15 +80,9 @@ def read_zip_lines(
     binary = spark.read.format("binaryFile").load(paths)
 
     def extract(it):
-        import io
-        import zipfile
-
         for pdf in it:
             for path, content in zip(pdf["path"], pdf["content"]):
-                with zipfile.ZipFile(io.BytesIO(bytes(content))) as z:
-                    names = z.namelist()
-                    text = z.read(names[0]).decode("utf-8") if names else ""
-                lines = text.splitlines()
+                lines = decompress(bytes(content)).splitlines()
                 if drop_first_line and lines:
                     lines = lines[1:]
                 yield pd.DataFrame(
@@ -100,6 +92,35 @@ def read_zip_lines(
     return binary.select("path", "content").mapInPandas(
         extract, "Text string, _kpf_source string"
     )
+
+
+def _zip_first_entry(content: bytes) -> str:
+    import io
+    import zipfile
+
+    with zipfile.ZipFile(io.BytesIO(content)) as z:
+        names = z.namelist()
+        return z.read(names[0]).decode("utf-8") if names else ""
+
+
+def _xz_text(content: bytes) -> str:
+    import lzma
+
+    return lzma.decompress(content).decode("utf-8", "replace")
+
+
+def read_zip_lines(
+    spark: SparkSession,
+    paths: list[str] | str,
+    drop_first_line: bool = False,
+) -> DataFrame:
+    """Text lines from the FIRST entry of each zip archive.
+
+    ref: Text/TextSource.cs:80-108 — the reference opens the archive and
+    reads only ``Entries.First()``; same here (per-blob parallelism, see
+    :func:`_read_archive_lines`).
+    """
+    return _read_archive_lines(spark, paths, _zip_first_entry, drop_first_line)
 
 
 def exact_path_slices(
@@ -192,30 +213,7 @@ def read_xz_lines(
     parallelism model as :func:`read_zip_lines` (xz is not splittable;
     the archive is the task unit); multi-stream concatenation (the xz
     analogue of gzip members) decompresses transparently."""
-    import pandas as pd
-
-    if isinstance(paths, str):
-        paths = [paths]
-    binary = spark.read.format("binaryFile").load(paths)
-
-    def extract(it):
-        import lzma
-
-        for pdf in it:
-            for path, content in zip(pdf["path"], pdf["content"]):
-                text = lzma.decompress(bytes(content)).decode(
-                    "utf-8", "replace"
-                )
-                lines = text.splitlines()
-                if drop_first_line and lines:
-                    lines = lines[1:]
-                yield pd.DataFrame(
-                    {"Text": lines, "_kpf_source": [path] * len(lines)}
-                )
-
-    return binary.select("path", "content").mapInPandas(
-        extract, "Text string, _kpf_source string"
-    )
+    return _read_archive_lines(spark, paths, _xz_text, drop_first_line)
 
 
 def read_landing(
@@ -250,16 +248,24 @@ def read_landing(
     if isinstance(paths, str):
         paths = [paths]
     fmt = settings.fmt
-    if settings.input_compression == Compression.XZ:
-        # no Hadoop XZ codec in stock Spark — same archive-reader route
-        # as zip, with the identical delimited-parse tail
+    archive = {Compression.ZIP: _zip_first_entry, Compression.XZ: _xz_text}
+    if settings.input_compression in archive:
+        # gzip/zstd are transparent Hadoop codecs; zip and xz (no Hadoop
+        # XZ codec in stock Spark) need the archive reader. txt: lines
+        # as-is. Delimited: parse the lines with from_csv against the
+        # caller's schema (required — there is no sampling pass over
+        # archive members).
+        codec = settings.input_compression.name.lower()
+        decompress = archive[settings.input_compression]
         if fmt == DataFormat.TXT:
-            return read_xz_lines(spark, paths)
+            return _read_archive_lines(spark, paths, decompress)
         if fmt in _DELIMITERS:
             if schema is None:
-                raise ValueError("xz-compressed delimited input requires a schema")
-            lines = read_xz_lines(
-                spark, paths, drop_first_line=settings.csv_headers
+                raise ValueError(
+                    f"{codec}-compressed delimited input requires a schema"
+                )
+            lines = _read_archive_lines(
+                spark, paths, decompress, drop_first_line=settings.csv_headers
             )
             ddl = ", ".join(
                 f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
@@ -272,32 +278,7 @@ def read_landing(
             return lines.select(parsed.alias("_r"), "_kpf_source").select(
                 "_r.*", "_kpf_source"
             )
-        raise NotImplementedError(f"xz input for format {fmt}")
-    if settings.input_compression == Compression.ZIP:
-        # gzip/zstd are transparent Hadoop codecs; zip needs the archive
-        # reader. txt: lines as-is. Delimited: parse the lines with
-        # from_csv against the caller's schema (required — there is no
-        # sampling pass over archive members).
-        if fmt == DataFormat.TXT:
-            return read_zip_lines(spark, paths)
-        if fmt in _DELIMITERS:
-            if schema is None:
-                raise ValueError("zip-compressed delimited input requires a schema")
-            lines = read_zip_lines(
-                spark, paths, drop_first_line=settings.csv_headers
-            )
-            ddl = ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-            )
-            parsed = F.from_csv(
-                F.col("Text"),
-                F.lit(ddl),
-                {"sep": _DELIMITERS[fmt], "quote": '"', "escape": '"'},
-            )
-            return lines.select(parsed.alias("_r"), "_kpf_source").select(
-                "_r.*", "_kpf_source"
-            )
-        raise NotImplementedError(f"zip input for format {fmt}")
+        raise NotImplementedError(f"{codec} input for format {fmt}")
     if fmt == DataFormat.TXT:
         # landing table shape: one Text:string column (templates/script.kql:2)
         df = spark.read.text(paths).withColumnRenamed("value", "Text")

@@ -1063,6 +1063,7 @@ try:  # pragma: no cover - exercised wherever cryptography is installed
     from cryptography.hazmat.primitives.ciphers import (
         algorithms as _nalgorithms,
     )
+    from cryptography.exceptions import UnsupportedAlgorithm as _NUnsupported
     from cryptography.hazmat.primitives.ciphers import modes as _nmodes
 
     try:  # ARC4 moved to the decrepit namespace in cryptography >= 43
@@ -1089,9 +1090,14 @@ def _rc4(key: bytes, data: bytes) -> bytes:
     """RC4 stream cipher (the §7.6.2 'RC4 function'). Dispatches to the
     native kernel when available and the key length is one OpenSSL
     accepts (PDF keys are md5-derived 5/10/16 bytes — all accepted;
-    the known-vector tests use shorter ones → pure path)."""
+    the known-vector tests use shorter ones → pure path). A build whose
+    OpenSSL refuses RC4 at run time (FIPS mode) imports fine but raises
+    on use — it falls back to the pure path too."""
     if _HAVE_NATIVE_CRYPTO and len(key) in (5, 7, 8, 10, 16, 20, 24, 32):
-        enc = _NCipher(_NARC4(key), mode=None).encryptor()
+        try:
+            enc = _NCipher(_NARC4(key), mode=None).encryptor()
+        except _NUnsupported:
+            return _rc4_py(key, data)
         return enc.update(data) + enc.finalize()
     return _rc4_py(key, data)
 

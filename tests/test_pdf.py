@@ -557,6 +557,28 @@ def test_rc4_known_vector():
     assert P._rc4(b"Wiki", b"pedia").hex() == "1021bf0420"
 
 
+@pytest.mark.skipif(not P._HAVE_NATIVE_CRYPTO, reason="no native cipher")
+def test_rc4_falls_back_when_native_cipher_refuses(monkeypatch):
+    """FIPS builds import ARC4 but refuse it at run time: the native
+    encryptor raises UnsupportedAlgorithm and _rc4 uses the pure path."""
+    from cryptography.exceptions import UnsupportedAlgorithm
+
+    calls = []
+
+    class _RefusingCipher:
+        def __init__(self, algorithm, mode=None):
+            calls.append(algorithm)
+
+        def encryptor(self):
+            raise UnsupportedAlgorithm("RC4 is disabled in FIPS mode")
+
+    monkeypatch.setattr(P, "_NCipher", _RefusingCipher)
+    key = bytes(range(16))  # a PDF-length key: the native path is tried
+    data = b"encrypted stream bytes " * 8
+    assert P._rc4(key, data) == P._rc4_py(key, data)
+    assert len(calls) == 1
+
+
 def test_aes128_core_fips_vector_and_cbc():
     """FIPS-197 Appendix C.1 — the independent ground truth for the
     AES-128 cipher core (encryptor and decryptor check each other AND

@@ -54,6 +54,18 @@ def _drain(q):
     q.awaitTermination(120)
 
 
+def _tree(root):
+    """Every path under ``root``, relative to it."""
+    return {str(p.relative_to(root)) for p in root.rglob("*")}
+
+
+def _commits(ckpt):
+    """Batch ids the checkpoint has committed."""
+    return sorted(
+        int(p.name) for p in (ckpt / "commits").iterdir() if p.name.isdigit()
+    )
+
+
 def test_streaming_prepartition_two_waves(spark, tmp_path, landing):
     land, orders = landing
     etl = StreamingEtl(
@@ -80,6 +92,17 @@ def test_streaming_prepartition_two_waves(spark, tmp_path, landing):
     # purity: partition dirs honor the reference hash
     bad = out.filter(F.col(PID_COL) != kusto_preforge_hash("o_orderpriority", 8, 42))
     assert bad.count() == 0
+
+    # a header-only blob is a 0-row micro-batch: the stream commits it,
+    # and its write adds or removes no path under the output
+    header = (land / "wave0.csv").read_text().splitlines()[0]
+    (land / "header_only.csv").write_text(header + "\n")
+    paths_before = _tree(tmp_path / "out")
+    q = etl.start_prepartition(POLICY, available_now=True)
+    _drain(q)
+    assert _commits(tmp_path / "ckpt") == [0, 1, 2]
+    assert _tree(tmp_path / "out") == paths_before
+    assert spark.read.parquet(str(tmp_path / "out")).count() == orders.count()
 
 
 def test_streaming_idempotent_ingest_replay(spark, tmp_path, landing):
@@ -192,6 +215,65 @@ def test_streaming_prepartition_replay_no_dup(spark, tmp_path, landing):
     assert n2 == n1, "replayed batch must not duplicate rows"
 
 
+def test_streaming_prepartition_crash_restart_same_checkpoint(
+    spark, tmp_path, landing
+):
+    """A batch that fails after its write and before its checkpoint
+    commit is replayed on restart with the same checkpoint: the output
+    rows and (pid, batch) directories equal those of a clean run."""
+    import os as _os
+
+    from pyspark.errors import StreamingQueryException
+
+    land, orders = landing
+    now = time.time()
+    for i in range(2):
+        (land / f"wave{i}.csv.pending").rename(land / f"wave{i}.csv")
+        # one blob per micro-batch, admitted in a pinned order
+        _os.utime(land / f"wave{i}.csv", (now + i * 10, now + i * 10))
+
+    def make_etl(name):
+        return StreamingEtl(
+            spark,
+            landing_dir=str(land) + "/*.csv",
+            checkpoint_dir=str(tmp_path / f"ckpt-{name}"),
+            output_dir=str(tmp_path / name),
+            schema=SCHEMA,
+            max_files_per_trigger=1,
+        )
+
+    _drain(make_etl("clean").start_prepartition(POLICY, available_now=True))
+
+    etl = make_etl("crash")
+
+    def crash_after_write(batch_df, batch_id, policy):
+        etl.prepartition_batch(batch_df, batch_id, policy)
+        if batch_id == 0:
+            raise RuntimeError("injected crash between write and commit")
+
+    q = etl.start(crash_after_write, POLICY, available_now=True)
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(120)
+    assert _commits(tmp_path / "ckpt-crash") == []
+    assert (tmp_path / "crash").exists(), "the batch wrote before it failed"
+
+    _drain(etl.start_prepartition(POLICY, available_now=True))
+    assert _commits(tmp_path / "ckpt-crash") == [0, 1]
+
+    def rows(name):
+        return sorted(spark.read.parquet(str(tmp_path / name)).collect())
+
+    def batch_dirs(name):
+        return {
+            (p.parent.name, p.name)
+            for p in (tmp_path / name).glob(f"{PID_COL}=*/_kpf_batch=*")
+        }
+
+    assert rows("crash") == rows("clean")
+    assert len(rows("clean")) == orders.count()
+    assert batch_dirs("crash") == batch_dirs("clean")
+
+
 DOC_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -240,7 +322,8 @@ def test_streaming_dedup_ingest_across_batches(spark, tmp_path):
         # the file source admits files oldest-first under
         # maxFilesPerTrigger; spaced mtimes pin the arrival order
         _os.utime(p, (now + i * 10, now + i * 10))
-    q = etl.start_dedup_ingest(
+    q = etl.start(
+        etl.dedup_ingest_batch,
         corpus_dir, trigger_seconds=None, available_now=True, shingle_n=4
     )
     _drain(q)
@@ -386,13 +469,15 @@ def test_streaming_corpus_stats_accumulate_and_replay(spark, sf_smoke, tmp_path)
         )
 
     stats_dir = str(tmp_path / "stats")
-    q = make_etl("ck1").start_corpus_stats(stats_dir, available_now=True)
+    etl = make_etl("ck1")
+    q = etl.start(etl.corpus_stats_batch, stats_dir, available_now=True)
     _drain(q)
     n1 = StreamingEtl.read_corpus_stats(spark, stats_dir).count()
     assert n1 > 0
 
     w2.coalesce(1).write.json(str(land / "wave1"))
-    q = make_etl("ck1").start_corpus_stats(stats_dir, available_now=True)
+    etl = make_etl("ck1")
+    q = etl.start(etl.corpus_stats_batch, stats_dir, available_now=True)
     _drain(q)
 
     merged = StreamingEtl.read_corpus_stats(spark, stats_dir)
@@ -410,7 +495,8 @@ def test_streaming_corpus_stats_accumulate_and_replay(spark, sf_smoke, tmp_path)
 
     # lost checkpoint: every file replays with the same batch semantics —
     # partition overwrite keeps the merged counts identical
-    q = make_etl("ck2").start_corpus_stats(stats_dir, available_now=True)
+    etl = make_etl("ck2")
+    q = etl.start(etl.corpus_stats_batch, stats_dir, available_now=True)
     _drain(q)
     again = StreamingEtl.read_corpus_stats(spark, stats_dir)
     assert again.exceptAll(expect).count() == 0
@@ -500,7 +586,8 @@ def test_streaming_ann_index_maintenance(spark, sf_smoke, tmp_path):
         )
 
     index_dir = str(tmp_path / "ann_index")
-    q = make_etl("cka1").start_ann_index(index_dir, km, cb, available_now=True)
+    etl = make_etl("cka1")
+    q = etl.start(etl.ann_index_batch, index_dir, km, cb, available_now=True)
     _drain(q)
     idx = StreamingEtl.read_ann_index(spark, index_dir)
     assert idx.count() == emb.count()
@@ -517,7 +604,8 @@ def test_streaming_ann_index_maintenance(spark, sf_smoke, tmp_path):
     assert from_batch.exceptAll(from_stream).count() == 0
 
     # lost checkpoint: full replay rewrites the same file-keyed partitions
-    q = make_etl("cka2").start_ann_index(index_dir, km, cb, available_now=True)
+    etl = make_etl("cka2")
+    q = etl.start(etl.ann_index_batch, index_dir, km, cb, available_now=True)
     _drain(q)
     again = StreamingEtl.read_ann_index(spark, index_dir)
     assert again.count() == emb.count()
@@ -601,7 +689,8 @@ def test_streaming_semdedup_ingest_across_batches(spark, tmp_path):
             for vid, vec in wave:
                 f.write(_json.dumps({"vec_id": vid, "embedding": vec}) + "\n")
         _os.utime(p, (now + i * 10, now + i * 10))
-    q = etl.start_semdedup_ingest(
+    q = etl.start(
+        etl.semdedup_ingest_batch,
         corpus_dir,
         trigger_seconds=None,
         available_now=True,
@@ -685,7 +774,8 @@ def test_streaming_dsir_ingest_filters_by_importance(spark, tmp_path):
         with open(p, "w", newline="") as f:
             _csv.writer(f).writerows(wave)
         _os.utime(p, (now + i * 10, now + i * 10))
-    q = etl.start_dsir_ingest(
+    q = etl.start(
+        etl.dsir_ingest_batch,
         corpus_dir,
         lam_df,
         thr,
@@ -750,7 +840,8 @@ def test_streaming_blocklist_ingest(spark, tmp_path):
             _csv.writer(f).writerows(wave)
         _os.utime(p, (now + i * 10, now + i * 10))
     bl = spark.createDataFrame([("spam.example.com",)], "domain string")
-    q = etl.start_blocklist_ingest(
+    q = etl.start(
+        etl.blocklist_ingest_batch,
         corpus_dir, bl, trigger_seconds=None, available_now=True
     )
     _drain(q)
@@ -809,7 +900,8 @@ def test_streaming_exact_substr_ingest_across_batches(spark, tmp_path):
         with open(p, "w", newline="") as f:
             _csv.writer(f).writerows(wave)
         _os.utime(p, (now + i * 10, now + i * 10))
-    q = etl.start_exact_substr_ingest(
+    q = etl.start(
+        etl.exact_substr_ingest_batch,
         corpus_dir, trigger_seconds=None, available_now=True
     )
     _drain(q)
@@ -925,7 +1017,8 @@ def test_streaming_classifier_ingest(spark, tmp_path):
         with open(p, "w", newline="") as f:
             _csv.writer(f).writerows(wave)
         _os.utime(p, (now + i * 10, now + i * 10))
-    q = etl.start_classifier_ingest(
+    q = etl.start(
+        etl.classifier_ingest_batch,
         corpus_dir,
         model["weights"],
         model["bias"],
@@ -1001,7 +1094,8 @@ def test_streaming_robots_ingest(spark, tmp_path):
             "domain string, robots_txt string",
         )
     )
-    q = etl.start_robots_ingest(
+    q = etl.start(
+        etl.robots_ingest_batch,
         corpus_dir, rules, agent="kpfbot",
         trigger_seconds=None, available_now=True,
     )

@@ -631,12 +631,28 @@ def test_hashed_lr_monotone_loss_and_learns(spark):
 
 
 def test_hashed_lr_deterministic(spark):
+    import math
+
     from kusto_pre_forge_spark.operators import textstats as TS
 
-    df = _ft_frame(spark, n=60)
+    # one unlabeled doc: it adds no gradient or loss term on either path
+    unlabeled = spark.createDataFrame(
+        [(10**6, "unlabeled stray words nobody graded", None)],
+        "doc_id long, text string, y double",
+    )
+    df = _ft_frame(spark, n=60).unionByName(unlabeled).coalesce(1)
     m1 = TS.train_hashed_text_lr(df, "y", dim=32, n_iters=3)
     m2 = TS.train_hashed_text_lr(df, "y", dim=32, n_iters=3)
     assert m1 == m2
+    # coalesce(1) takes the fused single-task trainer; three partitions
+    # take the distributed loop — same model
+    dist = TS.train_hashed_text_lr(
+        df.repartition(3, "doc_id"), "y", dim=32, n_iters=3
+    )
+    assert not any(math.isnan(x) for x in m1["weights"] + m1["losses"])
+    assert dist["weights"] == pytest.approx(m1["weights"], rel=1e-9, abs=1e-12)
+    assert dist["bias"] == pytest.approx(m1["bias"], rel=1e-9, abs=1e-12)
+    assert dist["losses"] == pytest.approx(m1["losses"], rel=1e-9, abs=1e-12)
 
 
 def test_hashed_lr_empty_corpus(spark):

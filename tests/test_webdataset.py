@@ -111,7 +111,8 @@ def test_streaming_webdataset_ingest(spark, tmp_path):
         with open(p, "w", newline="") as f:
             _csv.writer(f).writerows(wave)
         _os.utime(p, (now + i * 10, now + i * 10))
-    q = etl.start_webdataset_ingest(
+    q = etl.start(
+        etl.webdataset_ingest_batch,
         out, trigger_seconds=None, available_now=True
     )
     q.awaitTermination(300)
