@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from kusto_pre_forge_spark.catalog import PartitionPolicy
-from kusto_pre_forge_spark.plans.prepartition import PID_COL, prepartition
+from kusto_pre_forge_spark.plans.prepartition import PID_COL, prepartition, scatter
 from kusto_pre_forge_spark.sinks.manifest import IngestManifest
 
 
@@ -202,6 +202,10 @@ class StreamingEtl:
         instead of appending a second copy (effectively-once, ≡ the
         ingest-by no-op in the batch sink, TextKustoSink.cs:50-51).
 
+        The exchange is the batch plan's ``scatter`` with one writer per
+        pid: ``min(N, defaultParallelism)`` reducers, one file per
+        ``(pid, batch)`` directory.
+
         An empty batch (e.g. a header-only blob) is not probed for: its
         zero-row write replaces no partition and adds none.
         """
@@ -209,10 +213,7 @@ class StreamingEtl:
             "_kpf_batch", F.lit(batch_id)
         )
         self._overwrite(
-            with_pid.repartition(policy.max_partition_count, F.col(PID_COL)),
-            self.output_dir,
-            PID_COL,
-            "_kpf_batch",
+            scatter(with_pid, policy, writers=1), self.output_dir, PID_COL, "_kpf_batch"
         )
 
     def start_prepartition(

@@ -547,9 +547,10 @@ def test_sequence_pack_token_counter_hook(spark):
     # they must genuinely differ from whitespace counts here
     assert any(bpe[i]["n_tokens"] != ws[i]["n_tokens"] for i in (1, 2, 3))
     # prefix-sum invariant holds under either counter: starts are the
-    # exclusive cumsum of counts in (hash, doc_id) order
+    # exclusive cumsum of counts in (hash, doc_id) order; an empty doc
+    # shares its start with the next doc, so it sorts first on the tie
     for res in (ws, bpe):
-        rows = sorted(res.values(), key=lambda r: r["token_start"])
+        rows = sorted(res.values(), key=lambda r: (r["token_start"], r["n_tokens"]))
         acc = 0
         for r in rows:
             assert r["token_start"] == acc

@@ -165,3 +165,100 @@ def test_journal_counters(spark, orders, tmp_path):
     j.stop_reporting()
     assert "Test.Counter:  42" in lines_out
     assert j.snapshot()["Test.Counter"] == 42
+
+
+def _manifest_rows(rows):
+    return sorted(
+        (r[PID_COL], r["partition_value_sample"], r["record_count"]) for r in rows
+    )
+
+
+@pytest.mark.parametrize("n_roots", [1, 3])
+def test_manifest_describes_written_output(spark, orders, tmp_path, n_roots):
+    """The manifest aggregates what was written, not a rescan of the
+    input: with a key drawn anew on every evaluation, a rescan's samples
+    and counts would describe rows that were never written. (``uuid()``
+    is seeded once per plan, so a rescan repeats it; a nondeterministic
+    UDF does not.)"""
+    import glob
+    import uuid
+
+    draw = F.udf(lambda: uuid.uuid4().hex, "string").asNondeterministic()
+    keyed = orders.withColumn("k", draw())
+    pol = PartitionPolicy("k", 8, 42)
+    roots = [str(tmp_path / f"root{i}") for i in range(n_roots)]
+    res = run_prepartition(keyed, pol, roots[0] if n_roots == 1 else roots)
+
+    written = [r for r in roots if glob.glob(f"{r}/{PID_COL}=*")]
+    back = spark.read.parquet(written[0])
+    for root in written[1:]:
+        back = back.unionByName(spark.read.parquet(root))
+    assert _manifest_rows(res.manifest) == _manifest_rows(
+        partition_samples(back, pol).collect()
+    )
+    assert res.journal["PrePartition.RecordCount"] == orders.count()
+
+
+@pytest.mark.parametrize("n_roots", [1, 3])
+def test_empty_input(spark, orders, tmp_path, n_roots):
+    """A schema with no rows gives an empty manifest and zero counters."""
+    from kusto_pre_forge_spark.journal import PerfJournal
+
+    empty = spark.createDataFrame([], orders.schema)
+    roots = [str(tmp_path / f"root{i}") for i in range(n_roots)]
+    j = PerfJournal(delay_seconds=0.05, sink=lambda line: None)
+    res = run_prepartition(
+        empty, POLICY, roots[0] if n_roots == 1 else roots, perf_journal=j
+    )
+    assert res.manifest == []
+    assert res.journal == {
+        "PrePartition.RecordCount": 0,
+        "PrePartition.PartitionCount": 0,
+    }
+    assert j.snapshot() == res.journal
+
+
+def test_scatter_sized_to_task_slots(spark, orders, tmp_path):
+    """With more pids than task slots, no stage of the batch or the
+    streaming PrePartition runs more tasks than ``defaultParallelism``,
+    and each pid (or (pid, batch)) directory holds exactly one file."""
+    import glob
+
+    from kusto_pre_forge_spark.streaming import StreamingEtl
+
+    sc = spark.sparkContext
+    slots = sc.defaultParallelism
+    pol = PartitionPolicy("o_orderpriority", 4 * slots, 42)
+    one_task_input = orders.coalesce(1)
+    out, out_stream = str(tmp_path / "batch"), str(tmp_path / "stream")
+    etl = StreamingEtl(
+        spark, str(tmp_path / "land"), str(tmp_path / "ckpt"), out_stream, orders.schema
+    )
+    runs = {
+        "batch": lambda: run_prepartition(one_task_input, pol, out),
+        "stream": lambda: etl.prepartition_batch(one_task_input, 0, pol),
+    }
+    tracker = sc.statusTracker()
+    for name, run in runs.items():
+        group = f"kpf-scatter-slots-{name}-{tmp_path.name}"
+        sc.setJobGroup(group, name)
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        stage_tasks = {
+            sid: tracker.getStageInfo(sid).numTasks
+            for jid in tracker.getJobIdsForGroup(group)
+            for sid in tracker.getJobInfo(jid).stageIds
+            if tracker.getStageInfo(sid) is not None
+        }
+        assert stage_tasks, name
+        assert max(stage_tasks.values()) <= slots, (name, stage_tasks)
+
+    for pattern in (f"{out}/{PID_COL}=*", f"{out_stream}/{PID_COL}=*/_kpf_batch=*"):
+        dirs = glob.glob(pattern)
+        assert dirs, pattern
+        for d in dirs:
+            assert len(glob.glob(f"{d}/*.parquet")) == 1, d
+    assert spark.read.parquet(out).count() == orders.count()
+    assert spark.read.parquet(out_stream).count() == orders.count()
