@@ -75,39 +75,6 @@ def char_shingles(col: Column | str, n: int = 5, lowercase: bool = True) -> Colu
     return F.array_distinct(F.transform(idx, lambda i: F.substring(c, i, n)))
 
 
-def word_shingles(col: Column | str, n: int = 3) -> Column:
-    """Distinct word n-gram array."""
-    c = F.col(col) if isinstance(col, str) else col
-    toks = F.split(F.lower(F.trim(c)), r"\s+")
-    k = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1))
-    idx = F.sequence(F.lit(0), k - F.lit(1))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, n), " "))
-    )
-
-
-def _shingle_hash32(sh: Column) -> Column:
-    """Stable 32-bit shingle hash: first 8 hex chars of md5 → int.
-
-    md5-derived so the DuckDB oracle reproduces it exactly
-    (same construction in __spark_entry__ oracle SQL).
-    """
-    return F.conv(F.substring(F.md5(sh), 1, 8), 16, 10).cast("long")
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 64, seed: int = 7) -> Column:
-    """MinHash signature: for each hash fn j, min_j over shingles of
-    (a_j * h(s) + b_j) mod P. Pure array expression, no explode.
-
-    ⚠ evaluates the md5-based shingle hash once per (shingle, hash fn) —
-    prefer ``minhash_signature_from_hashes`` over a pre-hashed column when
-    computing many lanes (64× fewer md5 evaluations; the pipeline does).
-    """
-    return minhash_signature_from_hashes(
-        F.transform(shingles, _shingle_hash32), num_hashes, seed
-    )
-
-
 def _minhash_coeffs(num_hashes: int, seed: int) -> list[tuple[int, int]]:
     rng = random.Random(seed)
     return [
@@ -807,9 +774,9 @@ def embedding_dup_pairs(
 # transitive-closure join blows up.
 
 
-_CC_SINGLE_TASK_EDGES = int(
-    __import__("os").environ.get("KPF_CC_SINGLE_TASK_EDGES", "2000000")
-)
+#: edge count up to which :func:`connected_components` runs one union-find
+#: task instead of the alternating-star loop (~32 MB of id pairs)
+_CC_SINGLE_TASK_EDGES = 2_000_000
 
 
 def connected_components(
@@ -856,13 +823,12 @@ def connected_components(
     # algorithm by the data's actual shape): duplicate-pair sets are a
     # vanishing fraction of the corpus, and component labels are a pure
     # INTEGER graph property — any algorithm produces the same min-id
-    # labels. When the deduped edge list is bounded (default 2M edges,
-    # ~32 MB of id pairs; env KPF_CC_SINGLE_TASK_EDGES), one union-find
-    # task over the checkpointed edges replaces the alternating-star
-    # loop's ~(4-6 shuffles + 1 job) per round — measured ~25 sequential
-    # scheduler-bound jobs on dedup_clusters at bench scale. Edge sets
-    # past the bound (a truly duplicate-heavy 100 TB corpus) keep the
-    # O(log n)-round distributed loop below.
+    # labels. When the deduped edge list is bounded (_CC_SINGLE_TASK_EDGES,
+    # 2M edges), one union-find task over the checkpointed edges replaces
+    # the alternating-star loop's ~(4-6 shuffles + 1 job) per round —
+    # measured ~25 sequential scheduler-bound jobs on dedup_clusters at
+    # bench scale. Edge sets past the bound (a truly duplicate-heavy
+    # 100 TB corpus) keep the O(log n)-round distributed loop below.
     n_edges = edges.count()
     if n_edges <= _CC_SINGLE_TASK_EDGES:
 

@@ -36,6 +36,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kusto_pre_forge_spark.operators.iterate import fixed_iterations
+
 
 def dot(a: Column, b: Column) -> Column:
     """Σ aᵢ·bᵢ as a left-to-right fold (deterministic order, double math)."""
@@ -458,6 +460,62 @@ def _train_sample(
     return corpus.filter(unit < F.lit(float(sample_frac)))
 
 
+def _md5_seeds(
+    corpus: DataFrame, id_col: str, vec_col: str, seed: int, n: int
+) -> np.ndarray:
+    """The k-means init: the ``n`` corpus vectors with the smallest
+    md5(seed ‖ id), L2-normalised, as an (n, dim) array."""
+    rows = (
+        corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+        .withColumn(
+            "_h", F.md5(F.concat_ws("|", F.lit(str(seed)), F.col("_id").cast("string")))
+        )
+        .orderBy("_h", "_id")
+        .limit(n)
+        .collect()
+    )
+    V = np.array([np.asarray(r["_v"], dtype=np.float64) for r in rows])
+    return V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
+
+
+def _unit_batches(batches) -> list[np.ndarray]:
+    """One task's ``_v`` vectors as L2-normalised (n, dim) arrays, one
+    per Arrow batch — the ``load`` both k-means trainers share."""
+    out = []
+    for pdf in batches:
+        V = np.array([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
+        if V.size:
+            out.append(V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12))
+    return out
+
+
+def _code_sums(X: np.ndarray, codes: np.ndarray) -> dict:
+    """{code: (count, Σ rows)} over the rows of ``X`` assigned each code."""
+    out = {}
+    for j in np.unique(codes):
+        sel = X[codes == j]
+        out[int(j)] = (int(sel.shape[0]), sel.sum(axis=0))
+    return out
+
+
+def _fold_sums(partials) -> tuple[dict, dict]:
+    """(Σ vector, Σ count) per key over per-task lists of per-batch
+    ``{key: (count, Σv)}`` partials, accumulated in partition-then-batch
+    order — the fixed FP order that makes the trainers deterministic."""
+    sums: dict = {}
+    counts: dict = {}
+    for part in partials:
+        for batch in part:
+            for key, (n, v) in batch.items():
+                if key in sums:
+                    sums[key] += v
+                    counts[key] += n
+                else:
+                    sums[key] = v.copy()
+                    counts[key] = n
+    return sums, counts
+
+
 def ivf_kmeans_centroids(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -473,22 +531,22 @@ def ivf_kmeans_centroids(
 
     Spherical variant because the index metric is cosine: vectors are
     L2-normalized, assignment is argmax dot, the cell update is the mean
-    of assigned unit vectors re-normalized. Every step is distributed:
+    of assigned unit vectors re-normalized. The loop is
+    :func:`~kusto_pre_forge_spark.operators.iterate.fixed_iterations`:
 
-    - assignment + partial sums — ONE ``mapInPandas`` pass per
-      iteration (centroid matrix rides the closure: n_cells × dim
-      doubles); each task emits only its (cell, count, Σ unit-vector)
-      partials — ≤ n_cells tiny rows per task, no shuffle stage at all
-      (an earlier ``applyInPandas`` combine cost a full second Python
-      exchange per iteration and dominated wall-clock at bench scale);
-    - update — the driver folds the bounded partials (tasks × n_cells ×
-      dim doubles — MBs at 1000 tasks, never corpus-sized) in sorted
-      (cell, partition_id) order and re-normalizes.
+    - assignment + partial sums — ``step`` runs in ``mapInPandas``
+      (centroid matrix rides the closure: n_cells × dim doubles); each
+      task returns only its per-batch {cell: (count, Σ unit-vector)}
+      partials — no shuffle stage at all (an earlier ``applyInPandas``
+      combine cost a full second Python exchange per iteration and
+      dominated wall-clock at bench scale);
+    - update — ``fold`` sums the bounded partials (MBs at 1000 tasks,
+      never corpus-sized) and re-normalizes.
 
     Determinism: seeds are the ``n_cells`` corpus rows with the smallest
     md5(seed ‖ id); iterations are a fixed count (no convergence test →
-    no data-dependent control flow); the driver fold's (cell, pid) sort
-    fixes the FP accumulation order (parquet partitioning is
+    no data-dependent control flow); the fold's partition-then-batch
+    order fixes the FP accumulation order (parquet partitioning is
     deterministic). Empty cells keep their previous centroid.
 
     ``sample_frac`` trains on a deterministic md5-threshold slice (the
@@ -497,127 +555,20 @@ def ivf_kmeans_centroids(
     n_iters sample scans). Assignment/search still covers every vector.
     """
     corpus = _train_sample(corpus, id_col, sample_frac, "kpf-ivf")
-    seeds = (
-        corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .withColumn(
-            "_h", F.md5(F.concat_ws("|", F.lit(str(seed)), F.col("_id").cast("string")))
-        )
-        .orderBy("_h", "_id")
-        .limit(n_cells)
-        .collect()
-    )
-    C = np.array(
-        [np.asarray(r["_v"], dtype=np.float64) for r in seeds]
-    )  # (cells, dim)
-    C /= np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
+    C = _md5_seeds(corpus, id_col, vec_col, seed, n_cells)  # (cells, dim)
 
-    vecs = corpus.select(F.col(vec_col).alias("_v"))
-    # Single-partition fast path (guide §2.6 — the scheduler-latency
-    # driver-loop family): when the (possibly sampled) training frame is
-    # ONE partition, a lone task already sees every vector, so the whole
-    # fixed-iteration loop runs inside one mapInPandas call instead of
-    # n_iters sequential jobs. Arithmetic is bit-identical: with a
-    # single pid the driver's sorted (cell, pid) fold degenerates to
-    # batch-emission order, which the in-task loop replays exactly
-    # (batches outer, cells inner), and the per-iteration re-normalize
-    # of V yields the same array every time, so it is hoisted. Multi-
-    # partition inputs (any real corpus at scale) keep the distributed
-    # per-iteration partial/fold path below.
-    if vecs.rdd.getNumPartitions() == 1:
-        C0 = C.copy()
-        iters = int(n_iters)
+    def step(C, batches):
+        return [_code_sums(V, np.argmax(V @ C.T, axis=1)) for V in batches]
 
-        def _all_iters(it):
-            batches = []
-            for pdf in it:
-                V = np.array(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["_v"]]
-                )
-                if V.size == 0:
-                    continue
-                V = V / np.maximum(
-                    np.linalg.norm(V, axis=1, keepdims=True), 1e-12
-                )
-                batches.append(V)
-            Cl = C0.copy()
-            for _ in range(iters):
-                Cb = Cl.copy()
-                sums: dict[int, np.ndarray] = {}
-                counts: dict[int, int] = {}
-                for V in batches:
-                    cells = np.argmax(V @ Cb.T, axis=1)
-                    for j in np.unique(cells):
-                        sel = V[cells == j]
-                        key = int(j)
-                        v = sel.sum(axis=0)
-                        if key in sums:
-                            sums[key] += v
-                            counts[key] += int(sel.shape[0])
-                        else:
-                            sums[key] = v.copy()
-                            counts[key] = int(sel.shape[0])
-                for j, v in sums.items():
-                    Cl[j] = v / counts[j]
-                Cl /= np.maximum(
-                    np.linalg.norm(Cl, axis=1, keepdims=True), 1e-12
-                )
-            yield pd.DataFrame(
-                {"cell": list(range(Cl.shape[0])), "c": list(Cl)}
-            )
-
-        rows = vecs.mapInPandas(
-            _all_iters, "cell int, c array<double>"
-        ).collect()
-        C = np.array(
-            [
-                np.asarray(r["c"], dtype=np.float64)
-                for r in sorted(rows, key=lambda r: r["cell"])
-            ]
-        )
-        return [[float(x) for x in row] for row in C]
-
-    # the same (possibly sampled) vectors are scanned n_iters times —
-    # persist once, release after the loop
-    vecs = vecs.persist()
-    part_schema = "pid int, cell int, cnt long, vsum array<double>"
-    for _ in range(n_iters):
-        Cb = C.copy()
-
-        def _partials(it):
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId()
-            for pdf in it:
-                V = np.array([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
-                if V.size == 0:
-                    continue
-                V = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-                cells = np.argmax(V @ Cb.T, axis=1)
-                rows = {"pid": [], "cell": [], "cnt": [], "vsum": []}
-                for j in np.unique(cells):
-                    sel = V[cells == j]
-                    rows["pid"].append(pid)
-                    rows["cell"].append(int(j))
-                    rows["cnt"].append(int(sel.shape[0]))
-                    rows["vsum"].append(sel.sum(axis=0))
-                yield pd.DataFrame(rows)
-
-        partials = vecs.mapInPandas(_partials, part_schema).collect()
-        sums: dict[int, np.ndarray] = {}
-        counts: dict[int, int] = {}
-        for r in sorted(partials, key=lambda r: (r["cell"], r["pid"])):
-            j = r["cell"]
-            v = np.asarray(r["vsum"], dtype=np.float64)
-            if j in sums:
-                sums[j] += v
-                counts[j] += r["cnt"]
-            else:
-                sums[j] = v.copy()
-                counts[j] = int(r["cnt"])
+    def fold(C, partials):
+        sums, counts = _fold_sums(partials)
+        C = C.copy()
         for j, v in sums.items():
             C[j] = v / counts[j]
-        C /= np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-    vecs.unpersist()
+        return C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
+
+    vecs = corpus.select(F.col(vec_col).alias("_v"))
+    C = fixed_iterations(vecs, C, int(n_iters), _unit_batches, step, fold)
     return [[float(x) for x in row] for row in C]
 
 
@@ -1022,17 +973,18 @@ def pq_train_codebooks(
 ) -> list[list[list[float]]]:
     """Per-subspace k-means codebooks over L2-NORMALIZED vectors: dim
     splits into ``m`` contiguous subvectors; each subspace learns ``ks``
-    codewords. Every iteration is ONE distributed pass:
+    codewords. Every iteration is ONE distributed pass of
+    :func:`~kusto_pre_forge_spark.operators.iterate.fixed_iterations`:
 
     - assignment + partial sums run inside ``mapInPandas`` (numpy argmin
       per subspace over the batch) — vectors never leave their
       partitions;
-    - each task emits only its (sub, code) → (count, sum) partials
-      (≤ m × ks tiny rows per task); the driver folds them in sorted
-      (sub, code, partition_id) order — tasks × m × ks × dsub doubles,
-      MBs at 1000 tasks, never corpus-sized. (An earlier
-      ``applyInPandas`` combine cost a second full Python exchange per
-      iteration and dominated wall-clock at bench scale.)
+    - each task returns only its per-batch (sub, code) → (count, sum)
+      partials (≤ m × ks entries per batch); the fold sums them in
+      partition-then-batch order — tasks × m × ks × dsub doubles, MBs at
+      1000 tasks, never corpus-sized. (An earlier ``applyInPandas``
+      combine cost a second full Python exchange per iteration and
+      dominated wall-clock at bench scale.)
 
     Determinism mirrors :func:`ivf_kmeans_centroids`: seeds are the
     ``ks`` corpus rows with smallest md5(seed ‖ id), iteration count is
@@ -1042,17 +994,7 @@ def pq_train_codebooks(
     covers every vector).
     """
     corpus = _train_sample(corpus, id_col, sample_frac, "kpf-pq")
-    seeds = (
-        corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .withColumn(
-            "_h", F.md5(F.concat_ws("|", F.lit(str(seed)), F.col("_id").cast("string")))
-        )
-        .orderBy("_h", "_id")
-        .limit(ks)
-        .collect()
-    )
-    V0 = np.array([np.asarray(r["_v"], dtype=np.float64) for r in seeds])
-    V0 /= np.maximum(np.linalg.norm(V0, axis=1, keepdims=True), 1e-12)
+    V0 = _md5_seeds(corpus, id_col, vec_col, seed, ks)
     dim = V0.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -1060,114 +1002,28 @@ def pq_train_codebooks(
     # C[s]: (ks, dsub)
     C = [V0[:, s * dsub : (s + 1) * dsub].copy() for s in range(m)]
 
-    vecs = corpus.select(F.col(vec_col).alias("_v"))
-    # Single-partition fast path — same contract as the one in
-    # :func:`ivf_kmeans_centroids`: one task sees every training vector,
-    # so the whole fixed-iteration loop runs in ONE mapInPandas call
-    # (n_iters+1 sequential jobs → 1); the in-task fold replays the
-    # driver's sorted (sub, code, pid) accumulation batch-by-batch.
-    if vecs.rdd.getNumPartitions() == 1:
-        C0 = [c.copy() for c in C]
-        iters = int(n_iters)
-
-        def _all_iters(it):
-            batches = []
-            for pdf in it:
-                V = np.array(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["_v"]]
-                )
-                if V.size == 0:
-                    continue
-                V = V / np.maximum(
-                    np.linalg.norm(V, axis=1, keepdims=True), 1e-12
-                )
-                batches.append(V)
-            Cl = [c.copy() for c in C0]
-            for _ in range(iters):
-                Cb = [c.copy() for c in Cl]
-                sums: dict[tuple[int, int], np.ndarray] = {}
-                counts: dict[tuple[int, int], int] = {}
-                for V in batches:
-                    for s in range(m):
-                        Vs = V[:, s * dsub : (s + 1) * dsub]
-                        scores = (
-                            Vs @ Cb[s].T
-                            - 0.5 * (Cb[s] ** 2).sum(axis=1)[None, :]
-                        )
-                        codes = np.argmax(scores, axis=1)
-                        for j in np.unique(codes):
-                            sel = Vs[codes == j]
-                            key = (s, int(j))
-                            v = sel.sum(axis=0)
-                            if key in sums:
-                                sums[key] += v
-                                counts[key] += int(sel.shape[0])
-                            else:
-                                sums[key] = v.copy()
-                                counts[key] = int(sel.shape[0])
-                for (s, j), v in sums.items():
-                    if counts[(s, j)] > 0:
-                        Cl[s][j] = v / counts[(s, j)]
-            flat = []
+    def step(C, batches):
+        out = []
+        for V in batches:
+            part = {}
             for s in range(m):
-                for j in range(Cl[s].shape[0]):
-                    flat.append(
-                        {"sub": s, "code": j, "c": Cl[s][j]}
-                    )
-            yield pd.DataFrame(flat)
+                Vs = V[:, s * dsub : (s + 1) * dsub]  # (n, dsub)
+                # ||v - c||² argmin == argmax (v·c - ||c||²/2)
+                scores = Vs @ C[s].T - 0.5 * (C[s] ** 2).sum(axis=1)[None, :]
+                sums = _code_sums(Vs, np.argmax(scores, axis=1))
+                part.update({(s, j): nv for j, nv in sums.items()})
+            out.append(part)
+        return out
 
-        rows = vecs.mapInPandas(
-            _all_iters, "sub int, code int, c array<double>"
-        ).collect()
-        for r in rows:
-            C[r["sub"]][r["code"]] = np.asarray(r["c"], dtype=np.float64)
-        return [[[float(x) for x in row] for row in c] for c in C]
-
-    vecs = vecs.persist()
-    part_schema = "pid int, sub int, code int, cnt long, vsum array<double>"
-    for _ in range(n_iters):
-        Cb = [c.copy() for c in C]
-
-        def partials(it):
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId()
-            for pdf in it:
-                V = np.array([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
-                if V.size == 0:
-                    continue
-                V = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-                rows = {"pid": [], "sub": [], "code": [], "cnt": [], "vsum": []}
-                for s in range(m):
-                    Vs = V[:, s * dsub : (s + 1) * dsub]  # (n, dsub)
-                    # ||v - c||² argmin == argmax (v·c - ||c||²/2)
-                    scores = Vs @ Cb[s].T - 0.5 * (Cb[s] ** 2).sum(axis=1)[None, :]
-                    codes = np.argmax(scores, axis=1)
-                    for j in np.unique(codes):
-                        sel = Vs[codes == j]
-                        rows["pid"].append(pid)
-                        rows["sub"].append(s)
-                        rows["code"].append(int(j))
-                        rows["cnt"].append(int(sel.shape[0]))
-                        rows["vsum"].append(sel.sum(axis=0))
-                yield pd.DataFrame(rows)
-
-        collected = vecs.mapInPandas(partials, part_schema).collect()
-        sums: dict[tuple[int, int], np.ndarray] = {}
-        counts: dict[tuple[int, int], int] = {}
-        for r in sorted(collected, key=lambda r: (r["sub"], r["code"], r["pid"])):
-            key = (r["sub"], r["code"])
-            v = np.asarray(r["vsum"], dtype=np.float64)
-            if key in sums:
-                sums[key] += v
-                counts[key] += r["cnt"]
-            else:
-                sums[key] = v.copy()
-                counts[key] = int(r["cnt"])
+    def fold(C, partials):
+        sums, counts = _fold_sums(partials)
+        C = [c.copy() for c in C]
         for (s, j), v in sums.items():
-            if counts[(s, j)] > 0:
-                C[s][j] = v / counts[(s, j)]
-    vecs.unpersist()
+            C[s][j] = v / counts[(s, j)]
+        return C
+
+    vecs = corpus.select(F.col(vec_col).alias("_v"))
+    C = fixed_iterations(vecs, C, int(n_iters), _unit_batches, step, fold)
     return [[[float(x) for x in row] for row in c] for c in C]
 
 

@@ -11,8 +11,12 @@ md5-derived so the DuckDB oracle can replay it.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from kusto_pre_forge_spark.operators.iterate import in_one_task, one_partition
 
 TOKEN_RE = r"\s+"
 #: BPE-ish word/number/punctuation splitter (GPT-2-style coarse classes):
@@ -393,15 +397,6 @@ def _validate_profiles() -> None:
 _validate_profiles()
 
 
-def _langid_norm(col: Column | str) -> Column:
-    """lowercase → non-letter runs to one space → trim → pad with one
-    space each side, so every word contributes its boundary trigrams.
-    All-symbol text normalizes to a single space (no trigram, → 'und')."""
-    c = F.col(col) if isinstance(col, str) else col
-    squashed = F.regexp_replace(F.lower(c), f"[^{LANGID_CHARCLASS}]+", " ")
-    return F.concat(F.lit(" "), F.trim(squashed), F.lit(" "))
-
-
 def char_ngrams(col: Column | str, n: int = 3) -> Column:
     """All overlapping character n-grams as an array — pure expressions
     (sequence + substr), no explode, no UDF."""
@@ -413,18 +408,6 @@ def char_ngrams(col: Column | str, n: int = 3) -> Column:
     return F.when(F.length(c) >= n, grams).otherwise(
         F.array().cast("array<string>")
     )
-
-
-def _occurrence_count(norm: Column, gram: str) -> Column:
-    """Non-overlapping occurrence count of a literal n-gram: the
-    length-delta-of-replace trick — (len(t) − len(replace(t, g, ''))) /
-    len(g). One tight JVM string pass per gram; measured ~14× faster
-    than folding per-position lookups through a literal map (whose
-    GetMapValue is a linear scan per probe)."""
-    return (
-        (F.length(norm) - F.length(F.replace(norm, F.lit(gram), F.lit(""))))
-        / F.lit(len(gram))
-    ).cast("int")
 
 
 def _bind_once(value: Column, fn) -> Column:
@@ -1204,94 +1187,51 @@ def train_quality_lr(
     w = {f: 0.0 for f in feature_cols}
     b = 0.0
     losses: list[float] = []
-    # Single-partition fast path (guide §2.6, the same contract as the
-    # fused PQ/k-means trainings in similarity.py): when the
-    # checkpointed feature frame is ONE partition, a lone task sees
-    # every row, so all n_iters gradient steps run inside one
-    # mapInPandas call instead of n_iters sequential aggregate jobs.
-    # The in-task arithmetic replays Spark's exactly: z folds
-    # left-to-right in feature order, sums accumulate row by row in
+    # One partition: all n_iters steps run in one task (operators/
+    # iterate.py). The in-task arithmetic replays Spark's exactly: z
+    # folds left-to-right in feature order, sums accumulate row by row in
     # partition order (plain Python floats — no pairwise/numpy
-    # reordering), avg divides once at the end, and rows where the
-    # label or any feature is null are skipped (a null poisons every
-    # aggregate term). Verified output-identical against the
-    # per-iteration path on all test SFs. Multi-partition frames (real
-    # corpora at scale) keep the distributed loop below.
-    if feats.rdd.getNumPartitions() == 1:
-        iters, lr = int(n_iters), float(learn_rate)
-        cols = list(feature_cols)
+    # reordering), and avg divides once at the end. Rows where the label
+    # or any feature is null are dropped once at load (a null poisons
+    # every aggregate term, whatever the weights).
+    if one_partition(feats):
+        cols, lr = list(feature_cols), float(learn_rate)
 
-        def _fused(it):
-            import math
+        def load(batches):
+            return [
+                tup
+                for pdf in batches
+                for tup in pdf[["_y", *cols]].itertuples(index=False, name=None)
+                if not any(v is None or math.isnan(v) for v in tup)
+            ]
 
-            import pandas as pd
+        def step(state, rows):
+            wl, bl, _ = state
+            s, sb, sl = [0.0] * len(cols), 0.0, 0.0
+            for y_, *fv in rows:
+                z = bl
+                for wj, vj in zip(wl, fv):
+                    z = z + wj * vj
+                ez = math.exp(-z)
+                r = 1.0 / (1.0 + ez) - y_
+                for j, vj in enumerate(fv):
+                    s[j] += r * vj
+                sb += r
+                sl += math.log(1.0 + ez) + (1.0 - y_) * z
+            return s, sb, sl, len(rows)
 
-            rows = []
-            for pdf in it:
-                for tup in pdf[["_y", *cols]].itertuples(
-                    index=False, name=None
-                ):
-                    rows.append(tup)
-            wl = [0.0] * len(cols)
-            bl = 0.0
-            ls: list[float] = []
-            stopped = False
-            for _ in range(iters):
-                s = [0.0] * len(cols)
-                sb = 0.0
-                sl = 0.0
-                c = 0
-                for tup in rows:
-                    y_ = tup[0]
-                    if y_ is None or (
-                        isinstance(y_, float) and math.isnan(y_)
-                    ):
-                        continue
-                    fv = tup[1:]
-                    if any(
-                        v is None or (isinstance(v, float) and math.isnan(v))
-                        for v in fv
-                    ):
-                        continue
-                    z = bl
-                    for wj, vj in zip(wl, fv):
-                        z = z + wj * vj
-                    ez = math.exp(-z)
-                    p = 1.0 / (1.0 + ez)
-                    r = p - y_
-                    for j, vj in enumerate(fv):
-                        s[j] += r * vj
-                    sb += r
-                    sl += math.log(1.0 + ez) + (1.0 - y_) * z
-                    c += 1
-                if c == 0:
-                    stopped = True
-                    break
-                ls.append(sl / c)
-                for j in range(len(cols)):
-                    wl[j] -= lr * (s[j] / c)
-                bl -= lr * (sb / c)
-            yield pd.DataFrame(
-                {
-                    "w": [wl],
-                    "b": [bl],
-                    "losses": [ls],
-                    "stopped": [stopped],
-                }
-            )
+        def fold(state, partials):
+            ((s, sb, sl, c),) = partials
+            if c == 0:  # no usable row: nothing to fit
+                return state
+            wl, bl, ls = state
+            wl = [wj - lr * (sj / c) for wj, sj in zip(wl, s)]
+            return wl, bl - lr * (sb / c), [*ls, sl / c]
 
-        out = feats.mapInPandas(
-            _fused,
-            "w array<double>, b double, losses array<double>, "
-            "stopped boolean",
-        ).collect()[0]
-        return {
-            "weights": {
-                f: float(v) for f, v in zip(cols, out["w"])
-            },
-            "bias": float(out["b"]),
-            "losses": [float(x) for x in out["losses"]],
-        }
+        wl, bl, ls = in_one_task(
+            feats, ([0.0] * len(cols), 0.0, []), int(n_iters), load, step, fold
+        )
+        return {"weights": dict(zip(cols, wl)), "bias": bl, "losses": ls}
 
     y = F.col("_y")
     for _ in range(int(n_iters)):
@@ -1891,73 +1831,54 @@ def train_hashed_text_lr(
     losses: list[float] = []
     if n_docs == 0:
         return {"weights": w, "bias": b, "losses": losses}
-    # Single-partition fast path — same contract as train_quality_lr's:
-    # one task sees every feature row, so all n_iters gradient steps run
-    # in ONE mapInPandas job instead of n_iters sequential
-    # explode+groupBy jobs. In-task arithmetic replays the distributed
-    # path's exactly: z folds the gram weights left-to-right in _idxs
-    # order, per-key gradient sums accumulate in exploded row order
-    # (plain Python floats), and the update divides by the same n_docs.
-    # A null-label row adds no gradient or loss term (a null residual is
-    # skipped by the distributed sum) but still counts in n_docs.
-    # Verified output-identical on all test SFs.
-    if feats.rdd.getNumPartitions() == 1:
-        iters, lr, nd = int(n_iters), float(learn_rate), int(n_docs)
-        dim_i = int(dim)
+    # One partition: all n_iters steps run in one task (operators/
+    # iterate.py). The in-task arithmetic replays the distributed path's
+    # exactly: z folds the gram weights left-to-right in _idxs order,
+    # per-key gradient sums accumulate in exploded row order (plain
+    # Python floats), and the update divides by the same n_docs. A
+    # null-label row adds no gradient or loss term (a null residual is
+    # skipped by the distributed sum), so load drops it, but it still
+    # counts in n_docs.
+    if one_partition(feats):
+        lr, nd = float(learn_rate), int(n_docs)
 
-        def _fused(it):
-            import math
+        def load(batches):
+            return [
+                (float(y_), [int(i) for i in idxs_], int(n_))
+                for pdf in batches
+                for y_, idxs_, n_ in zip(pdf["_y"], pdf["_idxs"], pdf["_n"])
+                if not math.isnan(y_)
+            ]
 
-            import pandas as pd
-
-            rows = []
-            for pdf in it:
-                for y_, idxs_, n_ in zip(
-                    pdf["_y"], pdf["_idxs"], pdf["_n"]
-                ):
-                    rows.append(
-                        (float(y_), [int(i) for i in idxs_], int(n_))
-                    )
-            wl = [0.0] * dim_i
-            bl = 0.0
-            ls: list[float] = []
-            for _ in range(iters):
-                sums: dict[int, float] = {}
-                for y_, idxs_, n_ in rows:
-                    if math.isnan(y_):
-                        continue
-                    acc = 0.0
+        def step(state, rows):
+            wl, bl, _ = state
+            sums: dict[int, float] = {}
+            for y_, idxs_, n_ in rows:
+                acc = 0.0
+                for i in idxs_:
+                    acc += wl[i]
+                z = bl + (acc / float(n_) if n_ > 0 else 0.0)
+                ez = math.exp(-z)
+                r = 1.0 / (1.0 + ez) - y_
+                if n_ > 0:
+                    gn = r / float(n_)
                     for i in idxs_:
-                        acc += wl[i]
-                    z = bl + (acc / float(n_) if n_ > 0 else 0.0)
-                    ez = math.exp(-z)
-                    p = 1.0 / (1.0 + ez)
-                    r = p - y_
-                    if n_ > 0:
-                        gn = r / float(n_)
-                        for i in idxs_:
-                            sums[i] = sums.get(i, 0.0) + gn
-                    sums[-1] = sums.get(-1, 0.0) + r
-                    sums[-2] = sums.get(-2, 0.0) + (
-                        math.log(1.0 + ez) + (1.0 - y_) * z
-                    )
-                ls.append(sums.get(-2, 0.0) / nd)
-                for i, g in sums.items():
-                    if i >= 0:
-                        wl[i] -= lr * g / nd
-                bl -= lr * sums.get(-1, 0.0) / nd
-            yield pd.DataFrame(
-                {"w": [wl], "b": [bl], "losses": [ls]}
-            )
+                        sums[i] = sums.get(i, 0.0) + gn
+                sums[-1] = sums.get(-1, 0.0) + r
+                sums[-2] = sums.get(-2, 0.0) + (math.log(1.0 + ez) + (1.0 - y_) * z)
+            return sums
 
-        out = feats.mapInPandas(
-            _fused, "w array<double>, b double, losses array<double>"
-        ).collect()[0]
-        return {
-            "weights": [float(x) for x in out["w"]],
-            "bias": float(out["b"]),
-            "losses": [float(x) for x in out["losses"]],
-        }
+        def fold(state, partials):
+            (sums,) = partials
+            wl, bl, ls = state
+            wl = list(wl)
+            for i, g in sums.items():
+                if i >= 0:
+                    wl[i] -= lr * g / nd
+            return wl, bl - lr * sums.get(-1, 0.0) / nd, [*ls, sums.get(-2, 0.0) / nd]
+
+        wl, bl, ls = in_one_task(feats, (w, b, losses), int(n_iters), load, step, fold)
+        return {"weights": wl, "bias": bl, "losses": ls}
 
     y = F.col("_y")
     for _ in range(int(n_iters)):

@@ -169,6 +169,25 @@ def test_connected_components_empty_pairs(spark):
     assert dedup.connected_components(empty).count() == 0
 
 
+def test_connected_components_star_loop_matches_union_find(spark, monkeypatch):
+    """Past the single-task edge bound the alternating-star loop runs; it
+    labels the min-id, long-chain and empty fixtures exactly as the
+    union-find task does."""
+    fixtures = [
+        [(2, 1), (2, 3), (3, 4), (4, 2), (10, 11), (20, 21), (20, 22)],
+        [(i, i + 1) for i in range(64)],
+        [],
+    ]
+    for edges in fixtures:
+        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+        union_find = sorted(dedup.connected_components(pairs).collect())
+        # -1: every edge count, zero included, is past the bound
+        monkeypatch.setattr(dedup, "_CC_SINGLE_TASK_EDGES", -1)
+        star = sorted(dedup.connected_components(pairs).collect())
+        monkeypatch.undo()
+        assert star == union_find, edges[:3]
+
+
 def test_dedup_survivors_keeps_min_and_untouched_rows(spark, docs_with_dups):
     """End-to-end pairs→clusters→survivors: every duplicate cluster keeps
     exactly its min doc_id; rows in no pair pass through untouched."""

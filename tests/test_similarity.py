@@ -114,6 +114,11 @@ def test_ivf_kmeans_centroids_deterministic_and_improve_recall(spark, emb):
     km1 = similarity.ivf_kmeans_centroids(emb, n_cells=8, n_iters=3, seed=13)
     km2 = similarity.ivf_kmeans_centroids(emb, n_cells=8, n_iters=3, seed=13)
     assert km1 == km2, "same seed must reproduce identical centroids"
+    # one partition trains in one task, three in the per-iteration loop
+    km3 = similarity.ivf_kmeans_centroids(
+        emb.repartition(3, "vec_id"), n_cells=8, n_iters=3, seed=13
+    )
+    assert np.ravel(km3) == pytest.approx(np.ravel(km1), rel=1e-9, abs=1e-12)
     assert len(km1) == 8
     import math
 
@@ -278,6 +283,12 @@ def test_sampled_training_deterministic_and_valid(spark, emb):
     km1 = similarity.ivf_kmeans_centroids(emb, n_cells=8, n_iters=3, sample_frac=0.5)
     km2 = similarity.ivf_kmeans_centroids(emb, n_cells=8, n_iters=3, sample_frac=0.5)
     assert km1 == km2
+    # the same slice trained across three partitions: the same artifacts
+    emb3 = emb.repartition(3, "vec_id")
+    cb3 = similarity.pq_train_codebooks(emb3, m=32, ks=16, n_iters=3, sample_frac=0.5)
+    km3 = similarity.ivf_kmeans_centroids(emb3, n_cells=8, n_iters=3, sample_frac=0.5)
+    assert np.ravel(cb3) == pytest.approx(np.ravel(cb1), rel=1e-9, abs=1e-12)
+    assert np.ravel(km3) == pytest.approx(np.ravel(km1), rel=1e-9, abs=1e-12)
     # sampled codebooks still support a high rerank recall (exact rerank
     # mostly decouples recall from codebook quality)
     q = emb.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 110))

@@ -584,6 +584,23 @@ def test_train_quality_lr_monotone_and_learns(spark):
     assert res["weights"]["digit_ratio"] < 0
     res2 = ts.train_quality_lr(labeled, "y", n_iters=40, learn_rate=0.5)
     assert res2 == res, "training must be fully deterministic"
+    # three partitions take the per-iteration aggregate loop, coalesce(1)
+    # trains in one task: each is exactly repeatable, and they give the
+    # same model up to the order of the floating-point sums
+    dist = ts.train_quality_lr(
+        labeled.repartition(3, "doc_id"), "y", n_iters=40, learn_rate=0.5
+    )
+    dist2 = ts.train_quality_lr(
+        labeled.repartition(3, "doc_id"), "y", n_iters=40, learn_rate=0.5
+    )
+    assert dist2 == dist, "training must be fully deterministic"
+    one = ts.train_quality_lr(labeled.coalesce(1), "y", n_iters=40, learn_rate=0.5)
+    one2 = ts.train_quality_lr(labeled.coalesce(1), "y", n_iters=40, learn_rate=0.5)
+    assert one2 == one, "training must be fully deterministic"
+    for other in (res, dist):
+        assert one["weights"] == pytest.approx(other["weights"], rel=1e-9, abs=1e-12)
+        assert one["bias"] == pytest.approx(other["bias"], rel=1e-9, abs=1e-12)
+        assert one["losses"] == pytest.approx(other["losses"], rel=1e-9, abs=1e-12)
 
 
 # --- hashed n-gram text classifier (fastText-linear family) -------------------
